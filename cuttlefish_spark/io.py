@@ -118,21 +118,35 @@ def memo_put(cache: dict, key: tuple, value) -> None:
     must not leave superseded entries accumulating, nor their
     localCheckpointed frames pinned in executor storage for the
     session's lifetime. DataFrames inside an evicted value are
-    unpersisted; non-frame payloads (weight vectors) just drop."""
+    released (`release`)."""
     stale = [k for k in cache if k[:2] == key[:2] and k[2:4] != key[2:4]]
     for k in stale:
-        for item in _flat(cache.pop(k)):
-            unpersist = getattr(item, "unpersist", None)
-            if callable(unpersist):
-                try:
-                    unpersist()
-                except Exception:  # session already gone — nothing pinned
-                    pass
+        _release_value(cache.pop(k))
     cache[key] = value
 
 
-def _flat(v) -> tuple:
-    return tuple(v) if isinstance(v, tuple) else (v,)
+def release(frame) -> None:
+    """Free the executor storage a frame pins. `DataFrame.unpersist()`
+    drops a cache() entry but not the RDD a localCheckpoint() frame
+    reads from — that RDD stays persisted until the JVM garbage-collects
+    it (ContextCleaner) — so a checkpoint's RDD is unpersisted directly.
+    Frames derived from a released checkpoint can no longer run."""
+    frame.unpersist()
+    if isinstance(frame, DataFrame):
+        plan = frame._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+def _release_value(v) -> None:
+    """Release every unpersistable item inside an evicted memo value;
+    other payloads (weight vectors) just drop."""
+    for item in tuple(v) if isinstance(v, tuple) else (v,):
+        if callable(getattr(item, "unpersist", None)):
+            try:
+                release(item)
+            except Exception:  # session already gone — nothing pinned
+                pass
 
 
 # Registry of every module-level derived-model memo dict (r13 VERDICT
@@ -165,14 +179,8 @@ def memos_active() -> bool:
 
 
 def clear_memos() -> None:
-    """Evict every registered memo, unpersisting cached DataFrames."""
+    """Evict every registered memo, releasing its frames (`release`)."""
     for cache in _MEMO_REGISTRY:
-        for v in list(cache.values()):
-            for item in _flat(v):
-                unpersist = getattr(item, "unpersist", None)
-                if callable(unpersist):
-                    try:
-                        unpersist()
-                    except Exception:  # session already gone
-                        pass
+        for v in cache.values():
+            _release_value(v)
         cache.clear()

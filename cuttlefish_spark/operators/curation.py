@@ -8,13 +8,17 @@ These extend the LLM-data-pipeline surface (SURVEY.md §2.B "absent in
 reference" categories; the reference engine has no text analytics at
 all — its only text op is markdown->HTML,
 /root/reference/private/workers/facebook.rkt:30-32). Everything here
-is built from JVM-side built-ins; the one driver-side loop
-(bpe_train_merges) moves exactly one scalar triple per iteration —
-the same pattern as dedup_clusters' convergence check.
+is built from JVM-side built-ins except the quality classifier's
+training steps (an int64 NumPy kernel, operators.fixed_point);
+bpe_train_merges' driver-side loop moves exactly one scalar triple per
+iteration — the same pattern as dedup_clusters' convergence check.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +31,7 @@ from cuttlefish_spark.operators.dedup import (
     _pick_banding,
     _SHINGLES_SQL,
 )
+from cuttlefish_spark.operators.fixed_point import iterate_fixed_point
 from cuttlefish_spark.operators.scale import _SHUFFLE_SHARDS
 from cuttlefish_spark.operators.text import (
     _LM_SCORED_CTES,
@@ -1965,12 +1970,12 @@ def _qc_score(
     and would disagree), resid = p - y*S.
 
     The model rides in as a BROADCAST 129-row DataFrame, not a literal
-    array: literals change the generated code every step, forcing a
-    whole-stage-codegen recompile per iteration (measured: the literal
-    formulation cost ~1.6 s/step at sf0.1, dominated by compilation;
-    the broadcast-join plan is byte-identical across steps so the
-    codegen cache hits). feats/labels arrive pre-partitioned by doc_id,
-    so the doc aggregate and the labels join run exchange-free."""
+    array: literals change the generated code with every model, forcing
+    a whole-stage-codegen recompile (measured: the literal formulation
+    cost ~1.6 s per call at sf0.1, dominated by compilation; the
+    broadcast-join plan is byte-identical across calls so the codegen
+    cache hits). feats/labels arrive pre-partitioned by doc_id, so the
+    doc aggregate and the labels join run exchange-free."""
     wdf = spark.createDataFrame(
         [(b, int(w[b])) for b in range(_QC_D + 1)], "bucket long, w long"
     )
@@ -1992,17 +1997,51 @@ def _qc_score(
     )
 
 
+def _qc_table(feats: DataFrame, labels: DataFrame) -> DataFrame:
+    """The training table of iterate_fixed_point: one row per
+    (doc, bucket) feature with the doc's label."""
+    return feats.join(labels, "doc_id").select(
+        F.col("doc_id").alias("row_id"),
+        F.col("y").alias("label"),
+        F.col("bucket").alias("feature"),
+        "cnt",
+    )
+
+
+def _qc_partial(
+    w: np.ndarray, doc: np.ndarray, y: np.ndarray, bucket: np.ndarray,
+    cnt: np.ndarray,
+) -> np.ndarray:
+    """One partition's gradient, the int64 twin of _qc_score plus the
+    oracle's g{t}: score = sum(cnt * w[bucket]) per doc (bias row
+    included), p = clip(S/2 + score >> 2, 0, S) (NumPy >> is the same
+    arithmetic floor shift), g[b] = sum((p - y*S) * cnt) over the rows
+    in bucket b."""
+    score = np.zeros(len(y), np.int64)
+    np.add.at(score, doc, cnt * w[bucket])
+    p = np.clip(_QC_SCALE // 2 + (score >> 2), 0, _QC_SCALE)
+    g = np.zeros_like(w)
+    np.add.at(g, bucket, (p - y * _QC_SCALE)[doc] * cnt)
+    return g
+
+
+def _qc_step(n: int, t: int, w: np.ndarray, g: np.ndarray) -> np.ndarray:
+    """w - g // (n * lr_div(t)): NumPy // floors like Python's, matching
+    the oracle's pmod-spelled floordiv."""
+    return w - g // (n * _qc_lr_div(t))
+
+
 def _qc_train(spark: SparkSession, sf_dir: str) -> tuple:
     """_QC_T full-batch gradient steps of hashed-n-gram logistic
     regression with a hard-sigmoid link, ENTIRELY in fixed-point int64
     — see quality_classifier_ngram's docstring for why that makes
-    distributed training bit-reproducible. Returns (weights, n_docs);
-    weights[_QC_D] is the bias. The driver holds O(_QC_D) ints per step
-    (the model — the same bounded-scalar discipline as bpe_train_merges'
-    argmax); all per-doc work stays distributed, one collect per step.
-    Returns the checkpointed feats/labels too so callers score without
-    re-deriving them; memo key includes the Spark applicationId because
-    localCheckpoints die with their session."""
+    distributed training bit-reproducible. Returns (weights, n_docs,
+    feats, labels); weights[_QC_D] is the bias. The steps run through
+    iterate_fixed_point (one job each, gradient summed exactly on the
+    driver before the floored update); the driver holds O(_QC_D) ints.
+    The checkpointed feats/labels are returned too so callers score
+    without re-deriving them; memo key includes the Spark
+    applicationId because localCheckpoints die with their session."""
     from cuttlefish_spark.io import memo_key, memo_put
 
     key = memo_key(spark, sf_dir, "documents")
@@ -2010,10 +2049,8 @@ def _qc_train(spark: SparkSession, sf_dir: str) -> tuple:
         return _QC_CACHE[key]
 
     # Pre-partition BOTH sides by doc_id before checkpointing: the
-    # per-step doc aggregate and labels join then satisfy their
-    # distribution requirements from the checkpointed partitioning —
-    # the only exchange left per step is the 129-key gradient
-    # aggregate, which map-side partial combine collapses first.
+    # scorers' doc aggregate and labels join then satisfy their
+    # distribution requirements from the checkpointed partitioning.
     feats = (
         _qc_feats(spark, sf_dir)
         .repartition("doc_id")
@@ -2026,19 +2063,13 @@ def _qc_train(spark: SparkSession, sf_dir: str) -> tuple:
         .localCheckpoint(eager=True)
     )
     n = labels.count()
-    w = [0] * (_QC_D + 1)
-    for t in range(_QC_T):
-        scored = _qc_score(spark, feats, labels, w)
-        g_rows = (
-            feats.join(scored.select("doc_id", "resid"), "doc_id")
-            .groupBy("bucket")
-            .agg(F.sum(F.col("resid") * F.col("cnt")).alias("g"))
-            .collect()
-        )
-        m = n * _qc_lr_div(t)
-        # Python // floors — matches the oracle's pmod-spelled floordiv.
-        for row in g_rows:
-            w[row["bucket"]] -= int(row["g"]) // m
+    w = iterate_fixed_point(
+        _qc_table(feats, labels),
+        np.zeros(_QC_D + 1, np.int64),
+        _QC_T,
+        _qc_partial,
+        functools.partial(_qc_step, n),
+    ).tolist()
     memo_put(_QC_CACHE, key, (w, n, feats, labels))
     return w, n, feats, labels
 
@@ -2091,19 +2122,17 @@ def quality_classifier_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus collapses once to the hashed feature table
     (O(docs x distinct-buckets-per-doc) narrow ints + one bias row per
-    doc, repartitioned by doc_id and localCheckpointed); each step is
-    then ONE job — the model broadcast in as a 129-row join (not a
-    literal array: literals force a codegen recompile every step), an
-    exchange-free doc aggregate + labels join (both sides co-partitioned
-    by doc_id from the checkpoint), and a 129-key gradient aggregate
-    (map-side partial combine collapses it) ending in one O(_QC_D)-row
-    collect (the model — bounded, like bpe_train_merges' argmax row).
-    Measured per-step cost equals this harness's floor for ANY 2-stage
-    collect (~0.6 s — pure job latency, not data), so the loop's sf0.1
-    cold cost (~18 s) is fixed machinery like the streaming queries'
-    micro-batch setup, amortizing to nothing at production scale;
-    trained weights are memoized per corpus so re-scoring is one pass.
-    No windows, no skew exposure, no Python in the row path. Overflow
+    doc, repartitioned by doc_id and localCheckpointed); the training
+    steps run through operators.fixed_point.iterate_fixed_point, ONE
+    single-stage job each: an int64 NumPy kernel per partition (a
+    mapInArrow over the doc_id-partitioned training checkpoint) returns
+    that partition's 129-entry gradient, and the driver sums the
+    partials exactly before the floored update. The SQL step it
+    replaced (broadcast model join, doc aggregate, gradient aggregate)
+    cost about 6.5 jobs. Measured at sf0.01 on 4 cores: 156 -> 39 jobs
+    (15 prep + 24 steps) for the cold weights query. Trained weights
+    are memoized per corpus, so re-scoring is one pass; the scorers
+    stay pure JVM (_qc_score). No windows, no skew exposure. Overflow
     bound: |resid| <= 2^20 and the gradient sum must fit int64 => safe
     past 1e11 token occurrences per bucket; widen the gradient sum to
     DECIMAL(38,0) beyond that."""

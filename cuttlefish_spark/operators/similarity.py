@@ -26,11 +26,13 @@ before the threshold and emission.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cuttlefish_spark.functions import cosine_sim, dot, hash60
 from cuttlefish_spark.io import load_table, register_memo
+from cuttlefish_spark.operators.fixed_point import iterate_fixed_point
 from cuttlefish_spark.registry import query
 
 _COS_SQL = (
@@ -1616,15 +1618,15 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the final unit-normalization: one sqrt of an exact int64
     sum of squares and one IEEE division, both bit-identical.
 
-    Spark-first shape: X explodes once to (vec_id, dim, xf),
-    pre-partitioned by vec_id and localCheckpointed — per round the
-    projection aggregate runs exchange-free on that partitioning, the
-    model join is a broadcast of the 64-row v, and the d-key
-    re-aggregate map-side-combines to 64 rows. The driver holds the
-    64-int model per round (the _qc_train/bpe argmax bounded-scalar
-    discipline); at 100 TB each round is one broadcast joined scan +
-    one 64-key shuffle. The shift pair (32, 20) bounds every partial
-    below 2^63 through sf100 given |x| <= ~8."""
+    Shape: X explodes once to (vec_id, dim, xf), checkpointed
+    partitioned by vec_id; each round is ONE iterate_fixed_point job —
+    an int64 NumPy kernel per partition computes the per-vector
+    projection and that partition's 64-entry X^T w partial, and the
+    driver sums the partials exactly before the floored rescale. The
+    driver holds the 64-int model per round (the bpe argmax
+    bounded-scalar discipline); at 100 TB each round is one scan of
+    the checkpoint with no shuffle. The shift pair (32, 20) bounds
+    every partial below 2^63 through sf100 given |x| <= ~8."""
     v, ns = _pca_iterate(spark, sf_dir)
     out = spark.createDataFrame(
         [(j, int(v[j])) for j in range(_PCA_D)], "dim long, v_fixed long"
@@ -1662,41 +1664,54 @@ def _pca_x(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PCA_CACHE: dict[tuple, tuple] = register_memo()
 
 
+def _pca_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The training table of iterate_fixed_point: _pca_x, one row per
+    (vector, dim) entry, unlabelled."""
+    return _pca_x(spark, sf_dir).select(
+        F.col("vec_id").alias("row_id"),
+        F.lit(0).alias("label"),
+        F.col("dim").alias("feature"),
+        F.col("xf").alias("cnt"),
+    )
+
+
+def _pca_partial(
+    v: np.ndarray, vec: np.ndarray, _label: np.ndarray, dim: np.ndarray,
+    xf: np.ndarray,
+) -> np.ndarray:
+    """One partition's X^T (X v), the int64 twin of the oracle's w{t}
+    and s{t}: w = sum(xf * v[dim]) >> _PCA_WS per vector (NumPy >> is
+    the same arithmetic floor shift), s[d] = sum(xf * w) over the rows
+    in dimension d."""
+    w = np.zeros(vec.max() + 1, np.int64)
+    np.add.at(w, vec, xf * v[dim])
+    s = np.zeros_like(v)
+    np.add.at(s, dim, xf * (w >> _PCA_WS)[vec])
+    return s
+
+
+def _pca_step(_t: int, _v: np.ndarray, s: np.ndarray) -> np.ndarray:
+    """Rescale by the exact integer max(1, max|s| >> 20), floored
+    (NumPy // floors like Python's; the oracle spells it with pmod)."""
+    return s // max(1, int(np.abs(s).max()) >> 20)
+
+
 def _pca_iterate(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
-    """_PCA_T fixed-point power-iteration rounds; returns (v, ns) with
-    v the 64 int64 fixed-point coefficients and ns = sum(v^2) exact."""
+    """_PCA_T fixed-point power-iteration rounds, one
+    iterate_fixed_point job each over the (vec_id, dim, xf) matrix;
+    returns (v, ns) with v the 64 int64 fixed-point coefficients and
+    ns = sum(v^2) exact."""
     from cuttlefish_spark.io import memo_key, memo_put
 
     key = memo_key(spark, sf_dir, "embeddings")
     if key in _PCA_CACHE:
         return _PCA_CACHE[key]
 
-    x = _pca_x(spark, sf_dir).repartition("vec_id").localCheckpoint(eager=True)
-    v = [0] * _PCA_D
-    v[0] = _PCA_XS
-    for _ in range(_PCA_T):
-        vdf = spark.createDataFrame(
-            [(j, int(v[j])) for j in range(_PCA_D)], "dim int, v long"
-        )
-        w = (
-            x.join(F.broadcast(vdf), "dim")
-            .groupBy("vec_id")
-            .agg(
-                F.shiftright(
-                    F.sum(F.col("xf") * F.col("v")), _PCA_WS
-                ).alias("w")
-            )
-        )
-        s_rows = (
-            x.join(w, "vec_id")
-            .groupBy("dim")
-            .agg(F.sum(F.col("xf") * F.col("w")).alias("s"))
-            .collect()
-        )
-        s = {r["dim"]: int(r["s"]) for r in s_rows}
-        m = max(abs(sv) for sv in s.values())
-        d0 = max(1, m >> 20)
-        v = [s.get(j, 0) // d0 for j in range(_PCA_D)]
+    v0 = np.zeros(_PCA_D, np.int64)
+    v0[0] = _PCA_XS
+    v = iterate_fixed_point(
+        _pca_table(spark, sf_dir), v0, _PCA_T, _pca_partial, _pca_step
+    ).tolist()
     ns = sum(val * val for val in v)
     memo_put(_PCA_CACHE, key, (v, ns))
     return v, ns

@@ -8,17 +8,22 @@ the markdown_html pandas_udf in operators.ingest); everything else in
 this module is Layer-B/C extension mandated by the build spec.
 
 All queries are narrow per-row maps built from JVM-side array/string
-built-ins (no Python UDFs) — at 100 TB they scan, compute and emit
-with zero shuffles.
+built-ins (no Python UDFs; lang_id_learned's trainer steps are the
+one int64 NumPy kernel, see operators.fixed_point) — at 100 TB they
+scan, compute and emit with zero shuffles.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cuttlefish_spark.functions import hash60, tokens, word_shingles
 from cuttlefish_spark.io import load_table, register_memo, register_views, spread
+from cuttlefish_spark.operators.fixed_point import iterate_fixed_point
 from cuttlefish_spark.operators.twophase import (
     two_phase_prefix_sum,
     two_phase_rank,
@@ -303,12 +308,50 @@ def _lid_scores(feats: DataFrame, wdf: DataFrame) -> DataFrame:
     )
 
 
+def _lid_table(feats: DataFrame, labels: DataFrame) -> DataFrame:
+    """The training table of iterate_fixed_point: one row per
+    (doc, bucket) feature, labelled with the index of the doc's lang in
+    _LID_CLASSES (-1 when it is none of them: a negative for every
+    class, as in the oracle's CASE)."""
+    idx = F.array_position(F.array(*map(F.lit, _LID_CLASSES)), F.col("lang"))
+    return feats.join(labels, "doc_id").select(
+        F.col("doc_id").alias("row_id"),
+        (F.coalesce(idx, F.lit(0)) - 1).alias("label"),
+        F.col("bucket").alias("feature"),
+        "cnt",
+    )
+
+
+def _lid_partial(
+    w: np.ndarray, doc: np.ndarray, lang: np.ndarray, bucket: np.ndarray,
+    cnt: np.ndarray,
+) -> np.ndarray:
+    """One partition's (class, bucket) gradient, the int64 twin of
+    _lid_scores plus the oracle's p{t}/g{t}: per doc and class
+    score = sum(cnt * w[cls, bucket]), resid = clip(S/2 + score >> 2,
+    0, S) - S * (lang == cls), g[cls, b] = sum(resid * cnt)."""
+    S = _LID_SCALE
+    score = np.zeros((len(lang), w.shape[0]), np.int64)
+    np.add.at(score, doc, cnt[:, None] * w[:, bucket].T)
+    p = np.clip(S // 2 + (score >> 2), 0, S)
+    resid = p - S * (lang[:, None] == np.arange(w.shape[0]))
+    g = np.zeros(w.shape[::-1], np.int64)
+    np.add.at(g, bucket, resid[doc] * cnt[:, None])
+    return g.T
+
+
+def _lid_step(n: int, t: int, w: np.ndarray, g: np.ndarray) -> np.ndarray:
+    """Python-flooring update, as _qc_step."""
+    return w - g // (n * _lid_lr_div(t))
+
+
 def _lid_train(spark: SparkSession, sf_dir: str) -> tuple:
     """_LID_T one-vs-rest full-batch steps, fixed-point int64 — the
-    _qc_train loop with a class dimension: per step ONE job computes
-    every class's scores (broadcast 5x129-row model join), residuals
-    (hard sigmoid, label match per class), and the (cls, bucket)
-    gradient, ending in one O(classes x buckets) collect."""
+    _qc_train loop with a class dimension: the model is a
+    (classes, _LID_D + 1) int64 array and each step is ONE
+    iterate_fixed_point job computing every class's scores, residuals
+    and (cls, bucket) gradient per partition. Returns (w, n, feats,
+    labels) with w keyed by (cls, bucket)."""
     from cuttlefish_spark.io import memo_key, memo_put
 
     key = memo_key(spark, sf_dir, "documents")
@@ -324,28 +367,18 @@ def _lid_train(spark: SparkSession, sf_dir: str) -> tuple:
         .localCheckpoint(eager=True)
     )
     n = labels.count()
-    w = {(c, b): 0 for c in _LID_CLASSES for b in range(_LID_D + 1)}
-    S = _LID_SCALE
-    for t in range(_LID_T):
-        scores = _lid_scores(feats, _lid_model_df(spark, w))
-        p = F.greatest(
-            F.lit(0).cast("long"),
-            F.least(F.lit(S).cast("long"), F.lit(S // 2) + F.shiftright("score", 2)),
-        )
-        resid = scores.join(labels, "doc_id").select(
-            "doc_id",
-            "cls",
-            (p - (F.col("lang") == F.col("cls")).cast("long") * S).alias("resid"),
-        )
-        g_rows = (
-            feats.join(resid, "doc_id")
-            .groupBy("cls", "bucket")
-            .agg(F.sum(F.col("resid") * F.col("cnt")).alias("g"))
-            .collect()
-        )
-        m = n * _lid_lr_div(t)
-        for row in g_rows:  # Python // floors — matches the pmod oracle
-            w[(row["cls"], row["bucket"])] -= int(row["g"]) // m
+    wa = iterate_fixed_point(
+        _lid_table(feats, labels),
+        np.zeros((len(_LID_CLASSES), _LID_D + 1), np.int64),
+        _LID_T,
+        _lid_partial,
+        functools.partial(_lid_step, n),
+    )
+    w = {
+        (c, b): int(wa[i, b])
+        for i, c in enumerate(_LID_CLASSES)
+        for b in range(_LID_D + 1)
+    }
     memo_put(_LID_CACHE, key, (w, n, feats, labels))
     return w, n, feats, labels
 
@@ -378,14 +411,13 @@ def lang_id_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same bound); real corpora separate on char n-grams strongly.
 
     Scale shape: the corpus collapses once to the hashed feature table
-    (checkpointed, doc_id-partitioned); each step is ONE job — a
-    broadcast {len(_LID_CLASSES)}x{_LID_D + 1}-row model join (classes
-    ride the model table, NOT per-class jobs), an exchange-free doc
-    aggregate + labels join, and a (cls, bucket) gradient aggregate
-    collapsing map-side to O(classes x buckets) rows before one
-    bounded collect. Inference is one more broadcast join + argmax;
-    the heuristic side is lang_id's scan. Overflow bound as
-    quality_classifier_ngram's."""
+    (checkpointed, doc_id-partitioned); each training step is ONE
+    iterate_fixed_point job — an int64 NumPy kernel per partition
+    scores every class (classes ride the model array, NOT per-class
+    jobs) and returns its {len(_LID_CLASSES)}x{_LID_D + 1} gradient
+    partial, summed exactly on the driver before the floored update.
+    Inference is one broadcast model join + argmax; the heuristic side
+    is lang_id's scan. Overflow bound as quality_classifier_ngram's."""
     w, n, feats, labels = _lid_train(spark, sf_dir)
     scores = _lid_scores(feats, _lid_model_df(spark, w))
     idx = F.when(F.col("cls") == _LID_CLASSES[0], 0)

@@ -18,6 +18,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from cuttlefish_spark.io import clear_memos
 from cuttlefish_spark.registry import load_all
 
 # One query per exactness mechanism:
@@ -47,6 +48,12 @@ _QUERIES = [
     #    partition sorted the group
     "sql_frontend_q15",
     "adaptive_length_cutoff",
+    #  - the fixed-point trainers: per-partition int64 partials summed
+    #    exactly BEFORE the floored update (flooring each partition's
+    #    partial first makes the model depend on the partition count)
+    "quality_classifier_weights",
+    "lang_id_learned",
+    "embedding_pca_power",
 ]
 
 
@@ -75,10 +82,12 @@ def test_partition_count_invariance(spark, sf_dir, name):
         for n in (3, 24):
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
             spark.catalog.clearCache()
+            clear_memos()  # trained models would otherwise carry over
             hashes[n] = _canon_hash(fn(spark, sf_dir).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
         spark.catalog.clearCache()
+        clear_memos()
     assert hashes[3] == hashes[24], (
         f"{name} result depends on shuffle partition count — an "
         "order-dependent aggregation or partition-local numbering leaked"
